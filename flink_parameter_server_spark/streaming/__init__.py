@@ -16,7 +16,12 @@ from .windows import (
     stream_events,
     tumbling_daily_stream,
 )
-from .online_ps import online_mf_stream, sequential_reference
+from .online_ps import (
+    mf_records,
+    online_ps_stream,
+    pa_records,
+    sequential_reference,
+)
 
 __all__ = [
     "stream_events",
@@ -24,6 +29,8 @@ __all__ = [
     "session_windows_stream",
     "dedup_stream",
     "run_to_memory",
-    "online_mf_stream",
+    "online_ps_stream",
+    "mf_records",
+    "pa_records",
     "sequential_reference",
 ]

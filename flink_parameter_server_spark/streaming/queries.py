@@ -9,7 +9,7 @@ online, D21) — is registered rows-only here.
 
 from __future__ import annotations
 
-import os
+import shutil
 import tempfile
 import uuid
 
@@ -219,27 +219,6 @@ def streaming_purchase_attribution(spark, sf_dir):
     )
 
 
-def _run_instance_stream(spark, src_df, build_stream, prefix: str, out_cols):
-    """Write src_df as a single-file parquet source, stream it through
-    build_stream with an availableNow trigger into a memory sink, return
-    the materialized table projected to out_cols."""
-    tmp = tempfile.mkdtemp(prefix=prefix)
-    name = f"{prefix}{uuid.uuid4().hex[:8]}"
-    src_df.coalesce(1).write.parquet(f"{tmp}/src")
-    stream = spark.readStream.schema(src_df.schema).parquet(f"{tmp}/src")
-    q = (
-        build_stream(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", f"{tmp}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select(*out_cols)
-
-
 @register(
     "streaming_static_enrich",
     oracle="""
@@ -267,53 +246,52 @@ def streaming_static_enrich(spark, sf_dir):
     oracle=None,
     tags=("A1", "B1", "B8", "D21", "A7"),
     doc="The faithful per-record sequential PS loop on keyed streaming "
-    "state (applyInPandasWithState), both algorithm families in one "
-    "rows-only query discriminated by `family` (consolidated from "
-    "online_mf_sequential / pa_online_sequential). 'mf': ratings stream "
-    "keyed by item, per-record sequential SGD against co-located value "
-    "state — the faithful form of the reference's cyclic PS loop "
-    "(FlinkParameterServer#transform + PSOnlineMatrixFactorization "
-    "[C-high]); rows = (item, dim) factor components. 'pa': PA-I binary "
-    "training, instances in seq order, per-record margin/tau/update "
-    "against the CURRENT weights (PassiveAggressiveParameterServer"
-    "#transformBinary [C-high]) — the trajectory the batch trainers "
-    "approximate with mini-batch epochs; deterministic order forces the "
-    "psParallelism=1 trajectory (see online_ps docstrings). Not "
-    "SQL-expressible -> rows-only; numerics verified record-for-record "
-    "against driver-side sequential references in "
-    "tests/test_streaming.py.",
+    "state (applyInPandasWithState), both algorithm families drained by "
+    "ONE stream keyed by parameter id and discriminated by `family` in "
+    "the output (consolidated from online_mf_sequential / "
+    "pa_online_sequential). 'mf': ratings keyed by item id, per-record "
+    "sequential SGD against co-located value state — the faithful form "
+    "of the reference's cyclic PS loop (FlinkParameterServer#transform + "
+    "PSOnlineMatrixFactorization [C-high]); rows = (item, dim) factor "
+    "components. 'pa': PA-I binary training on the single model key -1 "
+    "(outside the item-id range), instances in seq order, per-record "
+    "margin/tau/update against the CURRENT weights "
+    "(PassiveAggressiveParameterServer#transformBinary [C-high]) — the "
+    "trajectory the batch trainers approximate with mini-batch epochs; "
+    "deterministic order forces the psParallelism=1 trajectory; rows = "
+    "(feature, 0) weights. One query pays the per-query and "
+    "per-state-store cost of a Python stateful micro-batch once, not "
+    "once per family; its input stays narrow (key, seq, user, rating, x "
+    "— PA's label rides in rating) because every extra column is "
+    "shipped per group (see online_ps docstrings). Not SQL-expressible "
+    "-> rows-only; numerics verified record-for-record against "
+    "driver-side sequential references in tests/test_streaming.py.",
 )
 def online_ps_sequential(spark, sf_dir):
     from ..ps import pa
-    from .online_ps import K, online_mf_stream, online_pa_stream
+    from .online_ps import mf_records, online_ps_stream, pa_records
 
-    # r16: the r15 driver-thread overlap of the two streams (c8e1f46)
-    # REGRESSED under the driver's cold-process bench (4.55 -> 9.47 s at
-    # 32 cores, 8-core reps consistent) even though the warm in-process
-    # A/B showed a win: two concurrent pandas-UDF availableNow streams
-    # each spin their own Python worker pool + state stores against
-    # ~19k groups/batch, and cold-process worker spin-up contention
-    # exceeds the overlap. The streams now run back-to-back again; the
-    # r15 vectorized per-group hot path (1c75f74) stays — it is
-    # independently sound and semantics-identical.
-    def _mf_run():
-        # --- MF: per-record SGD on item-keyed state
-        ratings = (
-            mf.ratings(spark, sf_dir)
-            .where(F.col("user") % 10 == 0)
-            .withColumn("seq", F.monotonically_increasing_id())
-            .select("seq", "user", "item", "rating")
+    records = mf_records(
+        mf.ratings(spark, sf_dir)
+        .where(F.col("user") % 10 == 0)
+        .withColumn("seq", F.monotonically_increasing_id())
+    ).unionByName(
+        pa_records(
+            pa.instances(spark, sf_dir)
+            .where(F.col("row_id") % 4 == 0)
+            .withColumnRenamed("row_id", "seq")
         )
-        # NOTE: no shuffle-partition clamp here — the per-record Python
-        # SGD loop is CPU-bound per key, so it wants the full task
-        # parallelism (unlike the pure-JVM stateful windows, where extra
-        # state stores are overhead at test scale).
-        tmp = tempfile.mkdtemp(prefix="fps_online_mf_")
-        name = f"online_mf_{uuid.uuid4().hex[:8]}"
-        ratings.coalesce(1).write.parquet(f"{tmp}/src")
-        stream = spark.readStream.schema(ratings.schema).parquet(f"{tmp}/src")
+    )
+    # NOTE: no shuffle-partition clamp here — the per-record Python SGD
+    # loop is CPU-bound per key, so it wants the full task parallelism
+    # (unlike the pure-JVM stateful windows, where extra state stores are
+    # overhead at test scale).
+    tmp = tempfile.mkdtemp(prefix="fps_online_")
+    name = f"online_ps_{uuid.uuid4().hex[:8]}"
+    try:
+        records.coalesce(1).write.parquet(f"{tmp}/src")
         q = (
-            online_mf_stream(spark, stream)
+            online_ps_stream(spark.readStream.schema(records.schema).parquet(f"{tmp}/src"))
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("update")
@@ -322,56 +300,16 @@ def online_ps_sequential(spark, sf_dir):
             .start()
         )
         q.awaitTermination()
-        mf_wide = spark.table(name)
-        return (
-            mf_wide.select(
-                "item",
-                "n_updates",
-                F.posexplode(F.array(*[F.col(f"f{j}") for j in range(K)])).alias("dim", "v"),
-            )
-            .select(
-                F.lit("mf").alias("family"),
-                F.col("item").alias("key"),
-                F.col("dim").cast("long").alias("dim"),
-                F.round("v", 6).alias("value"),
-                "n_updates",
-            )
-        )
-
-    def _pa_run():
-        # --- PA: per-record PA-I on a single model key
-        inst = (
-            pa.instances(spark, sf_dir)
-            .where(F.col("row_id") % 4 == 0)
-            .select(
-                F.col("row_id").alias("seq"),
-                F.lit(0).cast("long").alias("model_id"),
-                "y",
-                "x",
-            )
-        )
-        out = _run_instance_stream(
-            spark, inst, lambda s: online_pa_stream(spark, s), "fps_online_pa_",
-            ["model_id", "n_updates", "feat_id", "w"],
-        )
-        return out.select(
-            F.lit("pa").alias("family"),
-            F.col("feat_id").alias("key"),
-            F.lit(0).cast("long").alias("dim"),
-            F.round(F.col("w"), 6).alias("value"),
-            "n_updates",
-        )
-
-    if os.environ.get("FPS_ONLINE_PS_THREADED"):  # A/B instrumentation only
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            mf_fut = pool.submit(inheritable_thread_target(_mf_run))
-            pa_fut = pool.submit(inheritable_thread_target(_pa_run))
-            mf_part, pa_part = mf_fut.result(), pa_fut.result()
-        return mf_part.unionByName(pa_part)
-    mf_part = _mf_run()
-    pa_part = _pa_run()
-    return mf_part.unionByName(pa_part)
+    finally:
+        # the memory sink holds the rows; nothing reads source or checkpoint again
+        shutil.rmtree(tmp, ignore_errors=True)
+    is_pa = F.col("family") == "pa"
+    return spark.table(name).select(
+        "family", "key", "n_updates", F.posexplode("vals").alias("pos", "v")
+    ).select(
+        "family",
+        F.when(is_pa, F.col("pos")).otherwise(F.col("key")).cast("long").alias("key"),
+        F.when(is_pa, F.lit(0)).otherwise(F.col("pos")).cast("long").alias("dim"),
+        F.round("v", 6).alias("value"),
+        "n_updates",
+    )

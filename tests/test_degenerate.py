@@ -79,9 +79,25 @@ def test_multimodal_skips_null_payloads(spark, nulls_dir):
 
 def test_sequential_trainer_skips_null_instances(spark, nulls_dir):
     # pre-fix: np.stack over a column with null embeddings crashed the
-    # stateful stream; post-fix null instances drop in pa.instances
-    n = REGISTRY["online_ps_sequential"].fn(spark, nulls_dir).count()
-    assert n > 0
+    # stateful stream; post-fix null instances drop in pa.instances.
+    # Every column is consumed, and each family's update count must
+    # cover exactly its null-free input records. The nulled parity class
+    # (even vec_id) covers the whole PA domain (row_id % 4 == 0), so PA
+    # trains on nothing and emits no rows, while MF still trains.
+    from pyspark.sql import functions as F
+
+    from flink_parameter_server_spark.operators._util import t
+    from flink_parameter_server_spark.ps import mf, pa
+
+    rows = REGISTRY["online_ps_sequential"].fn(spark, nulls_dir).collect()
+    n_mf = mf.ratings(spark, nulls_dir).where(F.col("user") % 10 == 0).count()
+    n_pa = pa.instances(spark, nulls_dir).where(F.col("row_id") % 4 == 0).count()
+    assert t(spark, nulls_dir, "embeddings").where(F.col("vec_id") % 4 == 0).count() > n_pa
+    assert n_mf > 0
+    assert sum(r.n_updates for r in rows if r.family == "mf" and r.dim == 0) == n_mf
+    pa_counts = [r.n_updates for r in rows if r.family == "pa"]
+    assert pa_counts == [n_pa] * (pa.N_FEATURES if n_pa else 0)
+    assert all(r.family in ("mf", "pa") and r.value is not None for r in rows)
 
 
 def test_text_profile_oracle_parity_on_null_text(spark, nulls_dir):

@@ -424,15 +424,42 @@ def test_foreachbatch_upsert_multibatch_last_write_wins(spark):
         assert _rows(got) == _rows(batch)
 
 
+def _drain_to_memory(spark, records, name):
+    """Run the online PS stream once (availableNow) over `records` into
+    a memory sink; return its collected rows."""
+    from flink_parameter_server_spark.streaming.online_ps import online_ps_stream
+
+    with tempfile.TemporaryDirectory() as tmp:
+        src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
+        records.coalesce(1).write.parquet(src)
+        stream = spark.readStream.schema(records.schema).parquet(src)
+        q = (
+            online_ps_stream(stream)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return spark.table(name).collect()
+
+
 def test_online_mf_state_survives_restart(spark):
     """A1/D21: keyed state persists across query restarts — two availableNow
     runs over incrementally arriving files must equal one sequential pass
     over all records (the PS server state is durable, per the reference's
-    long-running server operators)."""
-    from flink_parameter_server_spark.ps import mf
+    long-running server operators). Both state shapes share the one state
+    store: MF item vectors and the PA model's weights plus its cumulative
+    update count."""
+    from flink_parameter_server_spark.ps import mf, pa
     from flink_parameter_server_spark.streaming.online_ps import (
-        K,
-        online_mf_stream,
+        PA_KEY,
+        mf_records,
+        online_ps_stream,
+        pa_records,
+        pa_sequential_reference,
         sequential_reference,
     )
 
@@ -442,10 +469,17 @@ def test_online_mf_state_survives_restart(spark):
         .withColumn("seq", F.monotonically_increasing_id())
         .select("seq", "user", "item", "rating")
     )
-    rows = sorted((r.seq, r.user, r.item, r.rating) for r in ratings.collect())
-    # split strictly by seq so "batch 1 then batch 2" equals the global order
-    first, second = rows[:120], rows[120:]
-    schema = ratings.schema
+    inst = pa.instances(spark, SF_SMALL).limit(100).withColumnRenamed("row_id", "seq")
+    records = mf_records(ratings).unionByName(pa_records(inst))
+    recs = sorted(tuple(r) for r in records.collect())
+    mf_recs = [r for r in recs if r[0] != PA_KEY]
+    pa_recs = [r for r in recs if r[0] == PA_KEY]
+    # split each family strictly by seq so "batch 1 then batch 2" equals
+    # the global order
+    mf_recs.sort(key=lambda r: r[1])
+    first = mf_recs[:120] + pa_recs[:60]
+    second = mf_recs[120:] + pa_recs[60:]
+    schema = records.schema
 
     with tempfile.TemporaryDirectory() as tmp:
         src, ckpt, out = f"{tmp}/src", f"{tmp}/ckpt", f"{tmp}/out"
@@ -459,7 +493,7 @@ def test_online_mf_state_survives_restart(spark):
 
             stream = spark.readStream.schema(schema).parquet(src)
             q = (
-                online_mf_stream(spark, stream)
+                online_ps_stream(stream)
                 .writeStream.foreachBatch(sink)
                 .outputMode("update")
                 .option("checkpointLocation", ckpt)
@@ -471,23 +505,28 @@ def test_online_mf_state_survives_restart(spark):
         run_batch()
         spark.createDataFrame(second, schema).coalesce(1).write.mode("append").parquet(src)
         run_batch()
-        # last emitted update per item (highest run_seq) = final state
+        # last emitted update per key (highest run_seq) = final state
         got = {}
         for r in spark.read.parquet(out).orderBy("run_seq").collect():
-            got[r.item] = [r[f"f{j}"] for j in range(K)]
+            got[(r.family, r.key)] = r
 
-    want = sequential_reference(rows)
-    assert set(got) == set(want)
+    want = sequential_reference([(seq, user, key, rating) for key, seq, user, rating, _ in mf_recs])
+    assert {k for f, k in got if f == "mf"} == set(want)
     for item, vec in want.items():
-        for a, b in zip(got[item], vec):
+        for a, b in zip(got[("mf", item)].vals, vec):
             assert abs(a - b) < 1e-9, f"item {item} diverged after restart"
+    pa_got = got[("pa", PA_KEY)]
+    assert pa_got.n_updates == len(pa_recs)  # the count survived the restart too
+    pa_want = pa_sequential_reference([(seq, y, x) for _, seq, _, y, x in pa_recs])
+    assert len(pa_got.vals) == len(pa_want)
+    for f, (a, b) in enumerate(zip(pa_got.vals, pa_want)):
+        assert abs(a - b) < 1e-9, f"PA feat {f} diverged after restart"
 
 
 def test_online_mf_matches_sequential_reference(spark):
     from flink_parameter_server_spark.ps import mf
     from flink_parameter_server_spark.streaming.online_ps import (
-        K,
-        online_mf_stream,
+        mf_records,
         sequential_reference,
     )
 
@@ -499,21 +538,9 @@ def test_online_mf_matches_sequential_reference(spark):
     )
     rows = [(r.seq, r.user, r.item, r.rating) for r in ratings.collect()]
 
-    with tempfile.TemporaryDirectory() as tmp:
-        src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-        ratings.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(ratings.schema).parquet(src)
-        out = online_mf_stream(spark, stream)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("t_online_mf")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = {r.item: [r[f"f{j}"] for j in range(K)] for r in spark.table("t_online_mf").collect()}
+    out = _drain_to_memory(spark, mf_records(ratings), "t_online_mf")
+    got = {r.key: r.vals for r in out}
+    assert {r.family for r in out} == {"mf"}
 
     want = sequential_reference(rows)
     assert set(got) == set(want)
@@ -529,44 +556,105 @@ def test_online_pa_matches_sequential_reference(spark):
     transformBinary)."""
     from flink_parameter_server_spark.ps import pa
     from flink_parameter_server_spark.streaming.online_ps import (
-        online_pa_stream,
+        PA_KEY,
+        pa_records,
         pa_sequential_reference,
     )
 
-    inst = (
-        pa.instances(spark, SF_SMALL)
-        .limit(200)
-        .select(
-            F.col("row_id").alias("seq"),
-            F.lit(0).cast("long").alias("model_id"),
-            "y",
-            "x",
-        )
-    )
+    inst = pa.instances(spark, SF_SMALL).limit(200).withColumnRenamed("row_id", "seq")
     rows = [(r.seq, r.y, list(r.x)) for r in inst.collect()]
 
-    with tempfile.TemporaryDirectory() as tmp:
-        src, ckpt = f"{tmp}/src", f"{tmp}/ckpt"
-        inst.coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(inst.schema).parquet(src)
-        q = (
-            online_pa_stream(spark, stream)
-            .writeStream.format("memory")
-            .queryName("t_online_pa")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        out = spark.table("t_online_pa").collect()
+    out = _drain_to_memory(spark, pa_records(inst), "t_online_pa")
 
     want = pa_sequential_reference(rows)
-    got = {r.feat_id: r.w for r in out}
+    assert [(r.family, r.key, r.n_updates) for r in out] == [("pa", PA_KEY, len(rows))]
+    got = out[0].vals
     assert len(got) == len(want)
-    assert all(r.n_updates == len(rows) for r in out)
     for f, wf in enumerate(want):
         assert abs(got[f] - wf) < 1e-9, f"feat {f}: {got[f]} != {wf}"
+
+
+def test_online_ps_sequential_entry_matches_references(spark):
+    """The registry entry itself, on its own inputs and filters (users
+    % 10 == 0 for MF, row_id % 4 == 0 for PA), every column consumed:
+    both families equal their driver-side sequential references after
+    the entry's 6-decimal rounding, and n_updates counts each family's
+    records."""
+    from collections import Counter
+
+    from flink_parameter_server_spark.plans import REGISTRY
+    from flink_parameter_server_spark.ps import mf, pa
+    from flink_parameter_server_spark.ps.mf import K
+    from flink_parameter_server_spark.ps.pa import N_FEATURES
+    from flink_parameter_server_spark.streaming.online_ps import (
+        pa_sequential_reference,
+        sequential_reference,
+    )
+
+    out = REGISTRY["online_ps_sequential"].fn(spark, SF_SMALL).collect()
+    ratings = [
+        (r.seq, r.user, r.item, r.rating)
+        for r in mf.ratings(spark, SF_SMALL)
+        .where(F.col("user") % 10 == 0)
+        .withColumn("seq", F.monotonically_increasing_id())
+        .collect()
+    ]
+    insts = [
+        (r.row_id, r.y, list(r.x))
+        for r in pa.instances(spark, SF_SMALL).where(F.col("row_id") % 4 == 0).collect()
+    ]
+    assert ratings and insts
+
+    mf_rows = [r for r in out if r.family == "mf"]
+    pa_rows = [r for r in out if r.family == "pa"]
+    assert len(mf_rows) + len(pa_rows) == len(out)
+
+    want_mf = sequential_reference(ratings)
+    per_item = Counter(item for _, _, item, _ in ratings)
+    assert sorted((r.key, r.dim) for r in mf_rows) == [
+        (item, j) for item in sorted(want_mf) for j in range(K)
+    ]
+    for r in mf_rows:
+        assert abs(r.value - round(want_mf[r.key][r.dim], 6)) <= 1e-6, r
+        assert r.n_updates == per_item[r.key], r
+    assert sum(r.n_updates for r in mf_rows if r.dim == 0) == len(ratings)
+
+    want_pa = pa_sequential_reference(insts)
+    assert sorted((r.key, r.dim) for r in pa_rows) == [(f, 0) for f in range(N_FEATURES)]
+    for r in pa_rows:
+        assert abs(r.value - round(want_pa[r.key], 6)) <= 1e-6, r
+        assert r.n_updates == len(insts), r
+
+
+def test_online_ps_sequential_removes_its_temp_dirs(spark, monkeypatch):
+    """Each call's parquet source and checkpoint are deleted once the
+    stream ends, whether it finished or raised."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    from flink_parameter_server_spark.plans import REGISTRY
+    from flink_parameter_server_spark.streaming import online_ps
+
+    def leftovers():
+        return {d for d in os.listdir(tempfile.gettempdir()) if d.startswith("fps_online_")}
+
+    entry = REGISTRY["online_ps_sequential"].fn
+    before = leftovers()
+    assert entry(spark, SF_SMALL).count() > 0
+    assert leftovers() <= before
+
+    real_stream = online_ps.online_ps_stream
+
+    def failing_stream(records):
+        boom = F.raise_error(F.lit("injected stream failure"))
+        rating = F.when(F.col("seq") >= 0, boom).otherwise(F.col("rating"))
+        return real_stream(records.withColumn("rating", rating))
+
+    monkeypatch.setattr(online_ps, "online_ps_stream", failing_stream)
+    with pytest.raises(StreamingQueryException, match="injected stream failure"):
+        entry(spark, SF_SMALL)
+    assert leftovers() <= before
 
 
 def test_stream_shuffle_clamp_is_refcounted_under_concurrency(spark):
